@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line. Failed queries are
   * reported explicitly in "failed" (and excluded from the total)
@@ -11,20 +9,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // The default whole-stage-codegen class cache holds 100 entries;
-      // a 300-query suite compiles thousands of distinct codegen units,
-      // so every bench pass was re-paying Janino compilation for every
-      // stage (measured: catalog_stats_sketch 15.3s -> 10.4s from this
-      // alone). Size the cache to the workload, not to local[32] — any
-      // deployment running this whole registry wants it.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
 
     val failed = scala.collection.mutable.ListBuffer[String]()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the run — local iteration aid

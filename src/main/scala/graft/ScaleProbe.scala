@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-headroom probe: amplifies the test corpus k× with
@@ -145,13 +145,8 @@ object ScaleProbe {
     val workDir = args.lift(2).getOrElse("/tmp/graft_scaleprobe")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val partitions = args.lift(3).getOrElse(cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", partitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus,
+      "spark.sql.shuffle.partitions" -> partitions)
 
     val docs0 = Tables.documents(spark, sfDir)
     val ev0 = Tables.events(spark, sfDir)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Focused timing harness: `runMain graft.TimeQ q1 q2 ...` times just
   * the named queries (min of 3 runs after one warmup) against
   * SPARK_GRAFT_SF_DIR — the iteration loop for plan tuning, where the
@@ -11,24 +9,19 @@ object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // match Bench: codegen class cache sized to the suite
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
     // diagnostic conf overrides: SPARK_GRAFT_CONF="k=v;k2=v2" — for
     // A/B-ing a setting on a few queries without touching the bench
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty => builder.config(k.trim, v.trim)
-        case _ if kv.trim.isEmpty => () // trailing ';' / empty env var
-        case _ => System.err.println(s"[timeq] ignoring malformed conf entry '$kv'")
+    val extra = sys.env.get("SPARK_GRAFT_CONF").toSeq
+      .flatMap(_.split(";")).flatMap { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) if k.trim.nonEmpty => Some(k.trim -> v.trim)
+          case _ if kv.trim.isEmpty => None // trailing ';' / empty env var
+          case _ =>
+            System.err.println(s"[timeq] ignoring malformed conf entry '$kv'")
+            None
+        }
       }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus, extra: _*)
     val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       val fn = SparkEntry.queries(name)

@@ -14,66 +14,45 @@ import graft.operators.Similarity
   * `spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 object GraftExtensions {
-  private def arity(name: String, n: Int)(
-      b: Seq[Expression] => Expression): Seq[Expression] => Expression =
-    children => {
+  /** One SQL function: its name, the expression class it builds, and
+    * its builder. */
+  type SqlFunction =
+    (String, Class[_ <: Expression], Seq[Expression] => Expression)
+
+  private def fn(name: String, cls: Class[_ <: Expression], n: Int)(
+      b: Seq[Expression] => Expression): SqlFunction =
+    (name, cls, children => {
       require(children.length == n,
         s"$name expects $n argument(s), got ${children.length}")
       b(children)
-    }
+    })
 
-  val cosineBuilder: Seq[Expression] => Expression =
-    arity("cosine_sim", 2)(c => CosineSimilarity(c.head, c(1)))
-
-  val bucketBuilder: Seq[Expression] => Expression =
-    arity("lsh_bucket", 1)(c => HyperplaneBucket(c.head, Similarity.hyperplanes))
-
-  val md5LongBuilder: Seq[Expression] => Expression =
-    arity("md5_long60", 1)(c => Md5Long(c.head))
-
-  val pqCodesBuilder: Seq[Expression] => Expression =
-    arity("pq_codes", 1)(c => PqCodes(c.head, Similarity.pqCodebook))
-
-  val pqLutBuilder: Seq[Expression] => Expression =
-    arity("pq_lut", 1)(c => PqLut(c.head, Similarity.pqCodebook))
+  /** The engine's SQL functions — the one table both the session
+    * extension and [[registerAll]] register. */
+  val functions: Seq[SqlFunction] = Seq(
+    fn("cosine_sim", classOf[CosineSimilarity], 2)(c =>
+      CosineSimilarity(c.head, c(1))),
+    fn("lsh_bucket", classOf[HyperplaneBucket], 1)(c =>
+      HyperplaneBucket(c.head, Similarity.hyperplanes)),
+    fn("md5_long60", classOf[Md5Long], 1)(c => Md5Long(c.head)),
+    fn("pq_codes", classOf[PqCodes], 1)(c =>
+      PqCodes(c.head, Similarity.pqCodebook)),
+    fn("pq_lut", classOf[PqLut], 1)(c =>
+      PqLut(c.head, Similarity.pqCodebook)))
 
   /** Register the same functions on an already-built session (temp
     * functions — handy in notebooks/tests where the builder is gone). */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", cosineBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "lsh_bucket", bucketBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "md5_long60", md5LongBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_codes", pqCodesBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_lut", pqLutBuilder, "built-in")
-  }
+  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
+    functions.foreach { case (name, _, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+        name, builder, "built-in")
+    }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      GraftExtensions.cosineBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("lsh_bucket"),
-      new ExpressionInfo(classOf[HyperplaneBucket].getName, "lsh_bucket"),
-      GraftExtensions.bucketBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("md5_long60"),
-      new ExpressionInfo(classOf[Md5Long].getName, "md5_long60"),
-      GraftExtensions.md5LongBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("pq_codes"),
-      new ExpressionInfo(classOf[PqCodes].getName, "pq_codes"),
-      GraftExtensions.pqCodesBuilder))
-    ext.injectFunction((
-      new FunctionIdentifier("pq_lut"),
-      new ExpressionInfo(classOf[PqLut].getName, "pq_lut"),
-      GraftExtensions.pqLutBuilder))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction((new FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), builder))
+    }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.TimestampType
 
 /** Structured-Streaming form of the CDC pipeline: the reference's
   * poll-loop (`sync/DataPoller.scala:47-80`) becomes a continuous
@@ -18,6 +19,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * gives exactly-once sinks.
   */
 object CdcStream {
+  // time units of the parity harnesses' sentinels (declared first: the
+  // sentinel vals below read them at object initialization)
+  private val HourMs = 3600L * 1000
+  private val TenDaysMs = 10L * 24 * HourMs
+  private val NsPerMs = 1000000L
+
   /** One normalized change (streaming twin of ChangeLog.normalize). */
   case class Change(user_id: Long, event_id: Long, ems: Long,
                     op: String, value_cents: Long)
@@ -142,10 +149,10 @@ object CdcStream {
     * the batch report (Similarity.isDeltaCol): the non-delta majority
     * plus the coarse-quantizer seeds are the BASE the index was built
     * on; the delta vectors replay as `nBatches` vec_id-contiguous
-    * micro-batches through a real file-source stream. A foreachBatch
-    * hook lands each arriving batch append-only (the production fast
-    * path — assignment needs no retrain), then emits the
-    * [[graft.operators.Similarity.ivfIncremental]] report over
+    * micro-batches through a real file-source stream. The replay's
+    * sink lands each arriving batch append-only (the production fast
+    * path — assignment needs no retrain); after each batch the monitor
+    * emits the [[graft.operators.Similarity.ivfIncremental]] report over
     * base∪arrived: its `rebalance` flags are the retrain trigger, and
     * the per-batch report rows (tagged `batch_id`) are the trigger
     * HISTORY an operator inspects. After the final batch the corpus is
@@ -154,53 +161,22 @@ object CdcStream {
     * CdcStreamSpec pins. */
   def ivfIngestMonitor(spark: SparkSession, embeddings: DataFrame,
                        nBatches: Int = 3): DataFrame = {
-    import java.nio.file.{Files, Path}
     import graft.operators.Similarity
     require(nBatches >= 1, s"nBatches must be >= 1 (got $nBatches)")
     val seedHi = Similarity.CentroidLo + Similarity.NumCentroids - 1
     val isSeed = col("vec_id").between(Similarity.CentroidLo, seedHi)
     val base = embeddings.where(!Similarity.isDeltaCol || isSeed)
     val deltas = embeddings.where(Similarity.isDeltaCol && !isSeed)
-    val b = deltas.agg(min("vec_id"), max("vec_id")).collect()(0)
-    val arrivals =
-      if (b.isNullAt(0)) Seq(deltas)
-      else rangeSlices(deltas, "vec_id", b.getLong(0), b.getLong(1),
-        nBatches)
-    val name = s"ivfmon_${parityRuns.incrementAndGet()}"
-    val root = Files.createTempDirectory(s"graft_$name")
-    val inDir = Files.createDirectories(root.resolve("in"))
-    val landed = root.resolve("landed").toString
-    // seed the landing zone with an empty slice so it is readable
-    // before the first arrival
-    deltas.limit(0).write.mode("overwrite").parquet(landed)
-    val staged: Seq[Path] = arrivals.zipWithIndex.map { case (a, i) =>
-      val d = root.resolve(s"stage_$i")
-      a.coalesce(1).write.mode("overwrite").parquet(d.toString)
-      import scala.jdk.CollectionConverters._
-      Files.list(d).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no staged part file under $d"))
-    }
-    val stream = spark.readStream.schema(embeddings.schema)
-      .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    val query = stream.writeStream.outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(landed); ()
-      }.start()
-    val reports =
-      try staged.zipWithIndex.map { case (part, i) =>
-        Files.move(part, inDir.resolve(f"batch_$i%05d.parquet"))
-        query.processAllAvailable()
-        val corpus = base.unionByName(spark.read.parquet(landed))
-        Similarity.ivfIncremental(corpus)
+    // the sink lands the arrivals append-only: after batch i it holds
+    // every delta of batches 0..i
+    val reports = Seq.newBuilder[DataFrame]
+    replay(spark, deltas, ranges("vec_id", nBatches),
+      drainEach = Some { (i, arrived) =>
+        reports += Similarity.ivfIncremental(base.unionByName(arrived))
           .withColumn("batch_id", lit(i.toLong))
           .localCheckpoint()
-      } finally query.stop()
-    val res = reports.reduce(_ unionByName _)
-    import scala.jdk.CollectionConverters._
-    Files.walk(root).iterator().asScala.toSeq.reverse
-      .foreach(p => try Files.deleteIfExists(p) catch { case _: Exception => () })
-    res
+      })((df, _) => df)
+    reports.result().reduce(_ unionByName _)
   }
 
   /** A change carrying its event-time column (watermarkable twin of
@@ -375,26 +351,9 @@ object CdcStream {
     val src = changelog.where(col("op") =!= "D")
       .select(col("user_id"), col("event_id"), col("ems"), col("op"),
         col("value_cents"), timestamp_millis(col("ems")).as("ts"))
-    val bounds = src.agg(min("ems"), max("ems"), max("event_id")).collect()(0)
-    if (bounds.isNullAt(0))
-      return spark.emptyDataFrame.select(lit(0L).as("user_id"),
-        lit(0L).as("tier"), lit(0L).as("valid_from_ms"),
-        lit(0L).as("valid_to_ms"), lit(0L).as("n_changes"),
-        lit(0L).as("last_event_id"), lit("").as("is_current"))
-    val sentinelMs = bounds.getLong(1) + 10L * 24 * 3600 * 1000
-    val sentinelId = bounds.getLong(2) + 1L
-    val sentinels = src.select(col("user_id")).distinct()
-      .select(col("user_id"), lit(sentinelId).as("event_id"),
-        lit(sentinelMs).as("ems"), lit("Z").as("op"),
-        lit(0L).as("value_cents"),
-        timestamp_millis(lit(sentinelMs)).as("ts"))
-    replayStaged(spark,
-        rangeSlices(src, "ems", bounds.getLong(0), bounds.getLong(1),
-          nBatches) :+ sentinels,
-        OutputMode.Append())(
-        df => tierStream(spark, df.as[ChangeTs]).toDF())
-      .select("user_id", "tier", "valid_from_ms", "valid_to_ms",
-        "n_changes", "last_event_id", "is_current")
+    replay(spark, src, ranges("ems", nBatches),
+      sentinel = Some(Sentinel(Seq("user_id"), "op" -> "Z", TenDaysMs)))(
+      (df, _) => tierStream(spark, df.as[ChangeTs]).toDF())
   }
 
   /** A raw product event (attribution input; ts = event time, ts_ns =
@@ -451,25 +410,28 @@ object CdcStream {
     * hash-equal the batch attribution_last_touch oracle. */
   def attributionParity(spark: SparkSession, events: DataFrame,
                         nBatches: Int = 3): DataFrame = {
+    import spark.implicits._
     // slice and sort by the exact ns timestamp — the batch operator and
     // the shared oracle order by ts_ns, and events carry sub-ms
     // precision, so ms-level replay order could flip last-touch credit
     // on same-user-same-ms collisions
-    val src = events.select(col("user_id"), col("event_id"),
-      col("ts_ns"), col("event_type"),
-      round(col("value") * 100).cast("long").as("value_cents"), col("ts"))
-    val bounds = src.agg(min("ts_ns"), max("ts_ns")).collect()(0)
-    val slices =
-      if (bounds.isNullAt(0)) Seq(src)
-      else rangeSlices(src, "ts_ns", bounds.getLong(0), bounds.getLong(1),
-        nBatches)
-    import spark.implicits._
-    replayStaged(spark, slices, OutputMode.Append())(
-        df => attributionStream(spark, df.as[RawEvent]).toDF())
+    val src = rawEvents(events, round(col("value") * 100).cast("long"))
+    replay(spark, src, ranges("ts_ns", nBatches))(
+        (df, _) => attributionStream(spark, df.as[RawEvent]).toDF())
       .groupBy("touch_type")
       .agg(count(lit(1)).as("n_purchases"),
         sum("value_cents").as("revenue_cents"))
   }
+
+  /** The [[RawEvent]] projection of the events table. */
+  private def rawEvents(events: DataFrame, valueCents: Column): DataFrame =
+    events.select(col("user_id"), col("event_id"), col("ts_ns"),
+      col("event_type"), valueCents.as("value_cents"), col("ts"))
+
+  /** The 'end' batch that flushes every user's last state, an hour
+    * past the feed (these feeds slice on ns). */
+  private val EndOfEvents =
+    Sentinel(Seq("user_id"), "event_type" -> "end", HourMs, perMs = NsPerMs)
 
   /** One emitted next-event transition. */
   case class Transition(user_id: Long, from_type: String, to_type: String)
@@ -513,28 +475,11 @@ object CdcStream {
   def transitionsParity(spark: SparkSession, events: DataFrame,
                         nBatches: Int = 3): DataFrame = {
     import spark.implicits._
-    val src = events.select(col("user_id"), col("event_id"),
-      col("ts_ns"), col("event_type"),
-      lit(0L).as("value_cents"), col("ts"))
-    val bounds = src.agg(min("ts_ns"), max("ts_ns"), max("event_id"))
-      .collect()(0)
-    if (bounds.isNullAt(0))
-      return spark.emptyDataFrame.select(lit("").as("from_type"),
-        lit("").as("to_type"), lit(0L).as("n"), lit(0L).as("p_ppm"))
-    val sentinelNs = bounds.getLong(1) + 3600L * 1000000000L
-    val sentinelId = bounds.getLong(2) + 1L
-    val sentinels = src.select(col("user_id")).distinct()
-      .select(col("user_id"), lit(sentinelId).as("event_id"),
-        lit(sentinelNs).as("ts_ns"), lit("end").as("event_type"),
-        lit(0L).as("value_cents"),
-        timestamp_millis(lit(sentinelNs / 1000000L)).as("ts"))
     val gridW = org.apache.spark.sql.expressions.Window
       .partitionBy("from_type")
-    replayStaged(spark,
-        rangeSlices(src, "ts_ns", bounds.getLong(0), bounds.getLong(1),
-          nBatches) :+ sentinels,
-        OutputMode.Append())(
-        df => transitionsStream(spark, df.as[RawEvent]).toDF())
+    replay(spark, rawEvents(events, lit(0L)), ranges("ts_ns", nBatches),
+        sentinel = Some(EndOfEvents))(
+        (df, _) => transitionsStream(spark, df.as[RawEvent]).toDF())
       .groupBy("from_type", "to_type")
       .agg(count(lit(1)).as("n"))
       .withColumn("tot", sum("n").over(gridW))
@@ -589,26 +534,9 @@ object CdcStream {
   def funnelParity(spark: SparkSession, events: DataFrame,
                    nBatches: Int = 3): DataFrame = {
     import spark.implicits._
-    val src = events.select(col("user_id"), col("event_id"),
-      col("ts_ns"), col("event_type"),
-      lit(0L).as("value_cents"), col("ts"))
-    val bounds = src.agg(min("ts_ns"), max("ts_ns"), max("event_id"))
-      .collect()(0)
-    if (bounds.isNullAt(0))
-      return spark.emptyDataFrame.select(lit(0L).as("n_signup"),
-        lit(0L).as("n_signup_click"), lit(0L).as("n_full_funnel"))
-    val sentinelNs = bounds.getLong(1) + 3600L * 1000000000L
-    val sentinelId = bounds.getLong(2) + 1L
-    val sentinels = src.select(col("user_id")).distinct()
-      .select(col("user_id"), lit(sentinelId).as("event_id"),
-        lit(sentinelNs).as("ts_ns"), lit("end").as("event_type"),
-        lit(0L).as("value_cents"),
-        timestamp_millis(lit(sentinelNs / 1000000L)).as("ts"))
-    replayStaged(spark,
-        rangeSlices(src, "ts_ns", bounds.getLong(0), bounds.getLong(1),
-          nBatches) :+ sentinels,
-        OutputMode.Append())(
-        df => funnelStream(spark, df.as[RawEvent]).toDF())
+    replay(spark, rawEvents(events, lit(0L)), ranges("ts_ns", nBatches),
+        sentinel = Some(EndOfEvents))(
+        (df, _) => funnelStream(spark, df.as[RawEvent]).toDF())
       .agg(
         count(when(col("t_signup") > 0L, 1)).as("n_signup"),
         count(when(col("t_click") > col("t_signup")
@@ -688,27 +616,15 @@ object CdcStream {
     val src = changelog.select(col("part").cast("long").as("part"),
       col("event_id"), col("ems"), col("op"),
       timestamp_millis(col("ems")).as("ts"))
-    val bounds = src.agg(min("ems"), max("ems"), max("event_id"))
-      .collect()(0)
-    if (bounds.isNullAt(0))
-      return spark.emptyDataFrame.select(lit(0L).as("part"),
-        lit(0L).as("n_events"), lit(0L).as("max_wait_ms"),
-        lit(0L).as("mean_wait_ms"), lit(0L).as("waited_ppm"),
-        lit(0L).as("utilization_ppm"))
-    val sentinelMs = bounds.getLong(1) + 3600L * 1000L
-    val sentinelId = bounds.getLong(2) + 1L
-    val sentinels = src.select(col("part")).distinct()
-      .select(col("part"), lit(sentinelId).as("event_id"),
-        lit(sentinelMs).as("ems"), lit("Z").as("op"),
-        timestamp_millis(lit(sentinelMs)).as("ts"))
-    replayStaged(spark,
-        rangeSlices(src, "ems", bounds.getLong(0), bounds.getLong(1),
-          nBatches) :+ sentinels,
-        OutputMode.Append())(
-        df => queueStream(spark, df.as[PartChange]).toDF())
-      .select("part", "n_events", "max_wait_ms", "mean_wait_ms",
-        "waited_ppm", "utilization_ppm")
+    replay(spark, src, ranges("ems", nBatches),
+      sentinel = Some(closeAll("part")))(
+      (df, _) => queueStream(spark, df.as[PartChange]).toDF())
   }
+
+  /** The 'Z' batch that flushes every `keys` group, an hour past the
+    * feed. */
+  private def closeAll(keys: String*): Sentinel =
+    Sentinel(keys, "op" -> "Z", HourMs)
 
   /** One change for the id-continuity replay (bucket precomputed so
     * the sentinel can target a bucket without owning an id in it). */
@@ -764,28 +680,12 @@ object CdcStream {
       expr(s"event_id div $bucketWidth").as("bucket"),
       col("event_id"), col("ems"), col("op"),
       timestamp_millis(col("ems")).as("ts"))
-    val bounds = src.agg(min("ems"), max("ems"), max("event_id"))
-      .collect()(0)
-    if (bounds.isNullAt(0))
-      return spark.emptyDataFrame.select(lit(0L).as("bucket"),
-        lit(0L).as("n_events"), lit(0L).as("id_lo"),
-        lit(0L).as("id_hi"), lit(0L).as("missing_inside"),
-        lit(0L).as("gap_before"), lit("").as("verdict"))
-    val sentinelMs = bounds.getLong(1) + 3600L * 1000L
-    val sentinelId = bounds.getLong(2) + 1L
-    val sentinels = src.select(col("bucket")).distinct()
-      .select(col("bucket"), lit(sentinelId).as("event_id"),
-        lit(sentinelMs).as("ems"), lit("Z").as("op"),
-        timestamp_millis(lit(sentinelMs)).as("ts"))
-    val flushed = replayStaged(spark,
-      rangeSlices(src, "ems", bounds.getLong(0), bounds.getLong(1),
-        nBatches) :+ sentinels,
-      OutputMode.Append())(
-      df => gapStream(spark, df.as[GapChange]).toDF())
     // the SAME fully-partitioned super-bucket classification as the
     // batch operator (Ledger.gapClassifyFrom) — no global lag window
     graft.operators.Ledger.gapClassifyFrom(
-      flushed.select("bucket", "n_events", "id_lo", "id_hi"))
+      replay(spark, src, ranges("ems", nBatches),
+        sentinel = Some(closeAll("bucket")))(
+        (df, _) => gapStream(spark, df.as[GapChange]).toDF()))
   }
 
   /** One product event for the linear-attribution replay. */
@@ -849,26 +749,21 @@ object CdcStream {
   def linearParity(spark: SparkSession, events: DataFrame,
                    nBatches: Int = 3): DataFrame = {
     import spark.implicits._
-    val src = events.select(col("user_id"), col("event_id"),
-      col("ts_ns"), expr("ts_ns div 1000000").as("ems"),
-      col("event_type"),
-      round(col("value") * 100).cast("long").as("value_cents"),
-      timestamp_millis(expr("ts_ns div 1000000")).as("ts"))
-    val bounds = src.agg(min("ems"), max("ems")).collect()(0)
-    if (bounds.isNullAt(0))
-      return spark.emptyDataFrame.select(lit("").as("touch_type"),
-        lit(0L).as("n_journeys"), lit(0L).as("n_touches"),
-        lit(0L).as("credit_milli_cents"))
-    replayStaged(spark,
-      rangeSlices(src, "ems", bounds.getLong(0), bounds.getLong(1),
-        nBatches),
-      OutputMode.Append())(
-      df => linearStream(spark, df.as[LinEvent]).toDF())
+    replay(spark, linEvents(events), ranges("ems", nBatches))(
+        (df, _) => linearStream(spark, df.as[LinEvent]).toDF())
       .groupBy("touch_type")
       .agg(count(lit(1)).as("n_journeys"),
         sum("n_touches_row").as("n_touches"),
         sum("credit_milli").as("credit_milli_cents"))
   }
+
+  /** The [[LinEvent]] projection of the events table. */
+  private def linEvents(events: DataFrame): DataFrame =
+    events.select(col("user_id"), col("event_id"),
+      col("ts_ns"), expr("ts_ns div 1000000").as("ems"),
+      col("event_type"),
+      round(col("value") * 100).cast("long").as("value_cents"),
+      timestamp_millis(expr("ts_ns div 1000000")).as("ts"))
 
   /** Per-user U-shape journey state: the first and most recent touch
     * types plus per-type counts since the last purchase — O(|event
@@ -960,21 +855,8 @@ object CdcStream {
   def positionParity(spark: SparkSession, events: DataFrame,
                      nBatches: Int = 3): DataFrame = {
     import spark.implicits._
-    val src = events.select(col("user_id"), col("event_id"),
-      col("ts_ns"), expr("ts_ns div 1000000").as("ems"),
-      col("event_type"),
-      round(col("value") * 100).cast("long").as("value_cents"),
-      timestamp_millis(expr("ts_ns div 1000000")).as("ts"))
-    val bounds = src.agg(min("ems"), max("ems")).collect()(0)
-    if (bounds.isNullAt(0))
-      return spark.emptyDataFrame.select(lit("").as("touch_type"),
-        lit("").as("role"), lit(0L).as("n_credits"),
-        lit(0L).as("credit_milli_cents"))
-    replayStaged(spark,
-      rangeSlices(src, "ems", bounds.getLong(0), bounds.getLong(1),
-        nBatches),
-      OutputMode.Append())(
-      df => positionStream(spark, df.as[LinEvent]).toDF())
+    replay(spark, linEvents(events), ranges("ems", nBatches))(
+        (df, _) => positionStream(spark, df.as[LinEvent]).toDF())
       .groupBy("touch_type", "role")
       .agg(sum("n_rows").as("n_credits"),
         sum("credit_milli").as("credit_milli_cents"))
@@ -1026,22 +908,10 @@ object CdcStream {
       expr(s"ems div $winMs").as("win"),
       col("ems"), col("op"),
       timestamp_millis(col("ems")).as("ts"))
-    val bounds = src.agg(min("ems"), max("ems")).collect()(0)
-    if (bounds.isNullAt(0))
-      return spark.emptyDataFrame.select(lit("").as("db"),
-        lit(0L).as("bin"), lit(0L).as("n_files"), lit(0L).as("bin_rows"),
-        lit(0L).as("first_win"), lit(0L).as("last_win"),
-        lit(0L).as("fill_ppm"), lit("").as("verdict"))
-    val sentinelMs = bounds.getLong(1) + 3600L * 1000L
-    val sentinels = src.select(col("db"), col("win")).distinct()
-      .select(col("db"), col("win"), lit(sentinelMs).as("ems"),
-        lit("Z").as("op"), timestamp_millis(lit(sentinelMs)).as("ts"))
-    val flushed = replayStaged(spark,
-      rangeSlices(src, "ems", bounds.getLong(0), bounds.getLong(1),
-        nBatches) :+ sentinels,
-      OutputMode.Append())(
-      df => compactionStream(spark, df.as[FileChange]).toDF())
-    graft.operators.Ledger.compactionBinsFrom(flushed)
+    graft.operators.Ledger.compactionBinsFrom(
+      replay(spark, src, ranges("ems", nBatches),
+        sentinel = Some(closeAll("db", "win")))(
+        (df, _) => compactionStream(spark, df.as[FileChange]).toDF()))
   }
 
   /** One user's change for the balance replay. */
@@ -1103,25 +973,9 @@ object CdcStream {
     val src = changelog.select(col("user_id"), col("event_id"),
       col("ems"), col("op"), col("value_cents"),
       timestamp_millis(col("ems")).as("ts"))
-    val bounds = src.agg(min("ems"), max("ems"), max("event_id"))
-      .collect()(0)
-    if (bounds.isNullAt(0))
-      return spark.emptyDataFrame.select(lit("").as("db"),
-        lit(0L).as("n_users"), lit(0L).as("n_overdrawn"),
-        lit(0L).as("min_balance_cents"), lit(0L).as("n_dips"),
-        lit(0L).as("end_balance_sum_cents"))
-    val sentinelMs = bounds.getLong(1) + 3600L * 1000L
-    val sentinelId = bounds.getLong(2) + 1L
-    val sentinels = src.select(col("user_id")).distinct()
-      .select(col("user_id"), lit(sentinelId).as("event_id"),
-        lit(sentinelMs).as("ems"), lit("Z").as("op"),
-        lit(0L).as("value_cents"),
-        timestamp_millis(lit(sentinelMs)).as("ts"))
-    replayStaged(spark,
-        rangeSlices(src, "ems", bounds.getLong(0), bounds.getLong(1),
-          nBatches) :+ sentinels,
-        OutputMode.Append())(
-        df => balanceStream(spark, df.as[BalChange]).toDF())
+    replay(spark, src, ranges("ems", nBatches),
+        sentinel = Some(closeAll("user_id")))(
+        (df, _) => balanceStream(spark, df.as[BalChange]).toDF())
       .groupBy(concat(lit("db"),
         pmod(col("user_id"), lit(3L)).cast("string")).as("db"))
       .agg(count(lit(1)).as("n_users"),
@@ -1155,24 +1009,102 @@ object CdcStream {
 
   private val parityRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Shared replay scaffolding for the parity harnesses: stage each
-    * micro-batch to its own parquet file and feed them IN ORDER through
-    * the file-stream source (the same lane the production StreamRun
-    * uses) into `pipe` and a uniquely-named memory sink, then return
-    * the sink contents eagerly checkpointed (so they outlive the
-    * dropped temp view).
+  /** What a replay reads off its feed before staging, in ONE aggregate:
+    * the slicing column's [lo, hi] and the largest event id (0 for a
+    * feed without one). */
+  private case class Bounds(lo: Long, hi: Long, maxId: Long)
+
+  /** How a replay cuts its feed into `n` micro-batches: `index` gives
+    * each row its batch number (null: the row is not replayed). A split
+    * that slices `on` a column reads the feed's [[Bounds]] first, and an
+    * empty feed then replays as one empty batch; the other splits see
+    * zero bounds. */
+  private case class Split(n: Int, index: Bounds => Column,
+                           on: Option[String] = None)
+
+  /** `n` contiguous ranges of the long column `c` over the feed's
+    * [lo, hi]: range i is [lo+span·i/n, lo+span·(i+1)/n), the last one
+    * closed at hi — batch edges computed from the bounds aggregate,
+    * never from collected rows. */
+  private def ranges(c: String, n: Int): Split =
+    Split(n, b => rangeIndex(col(c), b, n), Some(c))
+
+  private def rangeIndex(c: Column, b: Bounds, n: Int): Column = {
+    val span = b.hi - b.lo + 1
+    (0 until n).foldLeft(lit(null).cast("int")) { (acc, i) =>
+      when(c >= b.lo + span * i / n, i).otherwise(acc)
+    }
+  }
+
+  /** The flush batch a harness appends after its data: one row per
+    * distinct `keys` value (a single row when `keys` is empty), set
+    * `afterMs` past the feed's last instant, with an event id one past
+    * the feed's largest and `marker` = (column, value); the feed's
+    * other columns read zero. `perMs` is the slicing column's units
+    * per millisecond. */
+  private case class Sentinel(keys: Seq[String], marker: (String, String),
+                              afterMs: Long, perMs: Long = 1L) {
+    def rows(src: DataFrame, on: String, b: Bounds): DataFrame = {
+      val at = b.hi + afterMs * perMs
+      val cols = src.schema.map { f =>
+        (f.name match {
+          case k if keys.contains(k) => col(k)
+          case m if m == marker._1 => lit(marker._2)
+          case "event_id" => lit(b.maxId + 1L)
+          case c if c == on => lit(at)
+          case _ if f.dataType == TimestampType =>
+            timestamp_millis(lit(at / perMs))
+          case _ => lit(0L)
+        }).as(f.name)
+      }
+      val perKey =
+        if (keys.isEmpty) src.sparkSession.range(1).toDF()
+        else src.select(keys.map(col): _*).distinct()
+      perKey.select(cols: _*)
+    }
+  }
+
+  /** The one replay runner behind every parity harness (the contract
+    * they check: a stream's result on the whole feed equals the batch
+    * query's). It splits `src` into micro-batches by `split`, appends
+    * the `sentinel` flush batch, stages each batch to its own parquet
+    * file and feeds them IN ORDER through the file-stream source (the
+    * same lane the production StreamRun uses) into `pipe` and a
+    * uniquely-named memory sink, then returns the sink contents eagerly
+    * checkpointed (so they outlive the dropped temp view). `pipe` also
+    * sees the feed's bounds, for guards on the sentinel's output.
     *
-    * The batches stay DataFrames end to end — chunking, staging and the
-    * piped computation all run distributed; nothing ever collects a
-    * relation to the driver, so the verification lane scales with the
-    * corpus like the operators it checks. `maxFilesPerTrigger=1` plus a
-    * drain per dropped file pins the one-file-per-micro-batch replay
-    * order. */
-  private def replayStaged(spark: SparkSession, batches: Seq[DataFrame],
-      mode: OutputMode, perFileDrain: Boolean = false)
-      (pipe: DataFrame => DataFrame): DataFrame = {
+    * The batches stay DataFrames end to end — splitting, staging and
+    * the piped computation all run distributed; nothing but the bounds
+    * aggregate is collected, so the verification lane scales with the
+    * corpus like the operators it checks. `maxFilesPerTrigger=1` pins
+    * the one-file-per-micro-batch replay order. `drainEach` moves the
+    * files one at a time and drains after each, handing it the batch
+    * number and the sink so far. */
+  private def replay(spark: SparkSession, src: DataFrame, split: Split,
+      mode: OutputMode = OutputMode.Append(),
+      sentinel: Option[Sentinel] = None,
+      drainEach: Option[(Int, DataFrame) => Unit] = None)
+      (pipe: (DataFrame, Bounds) => DataFrame): DataFrame = {
     import java.nio.file.{Files, Path}
-    require(batches.nonEmpty, "replay needs at least one batch")
+    import scala.jdk.CollectionConverters._
+    val agg = split.on.map { c =>
+      val maxId =
+        if (src.columns.contains("event_id")) max("event_id") else lit(0L)
+      src.agg(min(c), max(c), maxId).collect()(0)
+    }
+    val empty = agg.exists(_.isNullAt(0))
+    val b = agg.filterNot(_.isNullAt(0)).fold(Bounds(0L, 0L, 0L))(r =>
+      Bounds(r.getLong(0), r.getLong(1), r.getAs[Long](2)))
+    val (feed, n) =
+      if (empty) (src.withColumn("__b", lit(0)), 1) // one empty batch
+      else {
+        val data = src.withColumn("__b", split.index(b))
+        sentinel.fold((data, split.n)) { s =>
+          (data.unionByName(s.rows(src, split.on.get, b)
+            .withColumn("__b", lit(split.n))), split.n + 1)
+        }
+      }
     val name = s"parity_${parityRuns.incrementAndGet()}"
     // RAM-backed scratch when available: the replay's staging files,
     // offset/commit logs and state-store deltas are all throwaway
@@ -1186,91 +1118,84 @@ object CdcStream {
         Files.createTempDirectory(shm, s"graft_$name")
       else Files.createTempDirectory(s"graft_$name")
     val inDir = Files.createDirectories(root.resolve("in"))
-    // Stage every micro-batch in ONE pass: tag each slice with its
-    // batch index, union, hash-repartition on the tag (all rows of one
-    // batch land in exactly one task) and write partitionBy — one scan
-    // + one write job instead of a sequential coalesce(1) job per
-    // batch (the slices are usually filters over one source, so the
-    // union's branches share the scan within a single job). Batch
-    // contents and count are identical to the per-batch form; only
-    // intra-file row order differs, which no parity pipe observes (the
-    // state shuffles re-order within a micro-batch anyway). An empty
-    // slice writes no partition dir — staged separately below (rare).
+    // Stage every micro-batch in ONE pass: hash-repartition the feed on
+    // its batch index (all rows of one batch land in exactly one task)
+    // and write partitionBy — one scan + one write job instead of a
+    // sequential coalesce(1) job per batch. Only intra-file row order
+    // is free, which no parity pipe observes (the state shuffles
+    // re-order within a micro-batch anyway). An empty batch writes no
+    // partition dir — staged separately below (rare).
     val stageAll = root.resolve("stage")
-    import scala.jdk.CollectionConverters._
-    batches.zipWithIndex
-      .map { case (b, i) => b.withColumn("__b", lit(i)) }
-      .reduce(_.unionByName(_))
-      .repartition(batches.length, col("__b"))
+    feed.where(col("__b").isNotNull)
+      .repartition(n, col("__b"))
       .write.partitionBy("__b").mode("overwrite").parquet(stageAll.toString)
-    val staged: Seq[Path] = batches.indices.map { i =>
+    val rows = feed.drop("__b")
+    val staged: Seq[Path] = (0 until n).map { i =>
       val d = stageAll.resolve(s"__b=$i")
       if (!Files.isDirectory(d))
-        batches(i).coalesce(1).write.mode("overwrite").parquet(d.toString)
+        rows.limit(0).coalesce(1).write.mode("overwrite").parquet(d.toString)
       Files.list(d).iterator().asScala
         .find(_.getFileName.toString.endsWith(".parquet"))
         .getOrElse(sys.error(s"no staged part file under $d"))
     }
-    val stream = spark.readStream.schema(batches.head.schema)
+    val stream = spark.readStream.schema(rows.schema)
       .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    // run the replay with few state partitions: every micro-batch
-    // commits one state-store file PER shuffle partition PER stateful
-    // stage, and the parity state is key-count-sized (thousands of
-    // keys at verify scale), so 32 partitions buy nothing but file
-    // churn — measured ~2x wall on the 13-harness family. The
-    // checkpoint is fresh per run (partition count is free to differ
-    // between runs), results are partition-count-invariant, and the
-    // session value is restored immediately after the drain. A
-    // production deployment sizes this to its key cardinality.
-    val partConf = "spark.sql.shuffle.partitions"
-    val outer = spark.conf.get(partConf)
-    // nio checkpoint manager for the replay scratch: the default local
-    // manager's ChecksumFileSystem writes cost ~105ms of every ~300ms
-    // micro-batch across the offsets/commits/state logs even on a RAM
-    // disk; the nio manager keeps the atomic-rename contract and cuts
-    // that to ~1ms. Scoped to the replay (restored below) — the
-    // production lane keeps the default for fault-tolerant storage.
-    val cfmConf = "spark.sql.streaming.checkpointFileManagerClass"
-    val outerCfm = spark.conf.getOption(cfmConf)
-    // interpreted execution for the replay: at gate scale each distinct
-    // harness plan pays ~1s of Janino whole-stage compilation in its
-    // FIRST micro-batch (measured via GRAFT_STREAM_PROFILE — batch 0
-    // addBatch ~1.2s vs ~0.2s for later batches), while the rows per
-    // replay are only thousands — interpreted row processing is
-    // microseconds here and results are bit-identical (same plan, same
-    // operators, codegen is an execution strategy not a semantics).
-    // Scoped to the replay and restored below — the production lane
-    // (StreamRun) keeps codegen, which wins as soon as rows dominate
-    // compile time.
-    val wscgConf = "spark.sql.codegen.wholeStage"
-    val outerWscg = spark.conf.get(wscgConf)
+    // Session conf scoped to the replay and restored after it, even
+    // when the pipe or the query fails:
+    // - few state partitions: every micro-batch commits one state-store
+    //   file PER shuffle partition PER stateful stage, and the parity
+    //   state is key-count-sized (thousands of keys at verify scale),
+    //   so 32 partitions buy nothing but file churn — measured ~2x wall
+    //   on the 13-harness family. The checkpoint is fresh per replay
+    //   (partition count is free to differ between runs), and results
+    //   are partition-count-invariant. A production deployment sizes
+    //   this to its key cardinality.
+    // - interpreted execution: each distinct harness plan pays ~1s of
+    //   Janino whole-stage compilation in its FIRST micro-batch, while
+    //   a replay's rows are only thousands — interpreted row processing
+    //   is microseconds here and results are bit-identical (same plan,
+    //   same operators; codegen is an execution strategy, not a
+    //   semantics). perfbench's traced registry_mix run measures the
+    //   per-batch phases (stream.add_batch_ms, stream.wal_commit_ms, …)
+    //   from the query progress. The production lane (StreamRun) keeps
+    //   codegen, which wins as soon as rows dominate compile time.
+    // - the nio checkpoint manager: the default local manager's
+    //   ChecksumFileSystem writes cost ~105ms of every ~300ms
+    //   micro-batch across the offsets/commits/state logs even on a RAM
+    //   disk; the nio manager keeps the atomic-rename contract and cuts
+    //   that to ~1ms. The production lane keeps the default for
+    //   fault-tolerant storage.
+    val scoped = Seq(
+      "spark.sql.shuffle.partitions" -> "3",
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[NioCheckpointFileManager].getName)
+    val outer = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
     val result = try {
-      spark.conf.set(partConf, "3")
-      spark.conf.set(wscgConf, "false")
-      spark.conf.set(cfmConf, classOf[NioCheckpointFileManager].getName)
-      // Default drain: place every staged file up front with strictly
-      // increasing mtimes — the file source admits oldest-first, one
-      // per micro-batch (maxFilesPerTrigger=1, fileSortOrder is mtime
-      // ascending), so ONE processAllAvailable replays the whole feed
-      // in order, minus a scheduler round-trip per batch (~0.5s/harness
-      // across the family). Caveat, measured: without the interleaved
-      // no-data batches, the LATE-EVENT filter watermark (which Spark
-      // holds one batch BEHIND the eviction watermark) lags one data
-      // batch further, so any harness whose CONTRACT is the per-batch
-      // late-drop cadence must pass perFileDrain=true and keep the
-      // move-then-drain handshake (lateParity — the one harness that
-      // exists to pin exactly that semantics; its oracle replays the
-      // per-batch watermark recurrence).
-      val query = pipe(stream).writeStream.format("memory")
+      scoped.foreach { case (k, v) => spark.conf.set(k, v) }
+      val query = pipe(stream, b).writeStream.format("memory")
         .option("checkpointLocation", root.resolve("chk").toString)
         .queryName(name).outputMode(mode).start()
-      try {
-        if (perFileDrain)
+      try drainEach match {
+        case Some(f) =>
           staged.zipWithIndex.foreach { case (part, i) =>
             Files.move(part, inDir.resolve(f"batch_$i%05d.parquet"))
             query.processAllAvailable()
+            f(i, spark.table(name))
           }
-        else {
+        case None =>
+          // Place every staged file up front with strictly increasing
+          // mtimes — the file source admits oldest-first, one per
+          // micro-batch (fileSortOrder is mtime ascending), so ONE
+          // processAllAvailable replays the whole feed in order, minus
+          // a scheduler round-trip per batch (~0.5s/harness across the
+          // family). Caveat, measured: without the interleaved no-data
+          // batches, the LATE-EVENT filter watermark (which Spark holds
+          // one batch BEHIND the eviction watermark) lags one data
+          // batch further, so any harness whose CONTRACT is the
+          // per-batch late-drop cadence must drain each file
+          // (lateParity, whose oracle replays the per-batch watermark
+          // recurrence).
           staged.zipWithIndex.foreach { case (part, i) =>
             // stamp the mtime BEFORE the move: the query is already
             // polling, and a file listed between move and stamp would
@@ -1283,42 +1208,17 @@ object CdcStream {
             Files.move(part, inDir.resolve(f"batch_$i%05d.parquet"))
           }
           query.processAllAvailable()
-        }
-        // opt-in micro-batch cost breakdown for the fixed-cost work:
-        // GRAFT_STREAM_PROFILE=1 prints each batch's durationMs map
-        // (queryPlanning / getBatch / addBatch / walCommit / ...)
-        if (sys.env.contains("GRAFT_STREAM_PROFILE"))
-          query.recentProgress.foreach(p => println(
-            s"[stream-profile] $name batch=${p.batchId} rows=${p.numInputRows} ${p.durationMs}"))
       } finally query.stop()
       spark.table(name).localCheckpoint()
-    } finally {
-      spark.conf.set(partConf, outer)
-      spark.conf.set(wscgConf, outerWscg)
-      outerCfm match {
-        case Some(v) => spark.conf.set(cfmConf, v)
-        case None => spark.conf.unset(cfmConf)
-      }
+    } finally outer.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
     spark.catalog.dropTempView(name)
     // best-effort cleanup of the staged inputs
-    import scala.jdk.CollectionConverters._
     Files.walk(root).iterator().asScala.toSeq.reverse
       .foreach(p => try Files.deleteIfExists(p) catch { case _: Exception => () })
     result
-  }
-
-  /** `df` split into n contiguous ranges of the (long) column `c`
-    * spanning [lo, hi] — batch boundaries computed from a 2-value
-    * aggregate, never from collected rows. */
-  private def rangeSlices(df: DataFrame, c: String, lo: Long, hi: Long,
-                          n: Int): Seq[DataFrame] = {
-    val span = hi - lo + 1
-    (0 until n).map { i =>
-      val a = lo + span * i / n
-      val b = if (i == n - 1) hi + 1 else lo + span * (i + 1) / n
-      df.where(col(c) >= a && col(c) < b)
-    }
   }
 
   /** Streaming↔batch sessionization parity harness — [[mergeParity]]'s
@@ -1338,30 +1238,10 @@ object CdcStream {
     val src = changelog
       .select(col("user_id"), col("event_id"), col("ems"), col("op"),
         col("value_cents"), timestamp_millis(col("ems")).as("ts"))
-    val bounds = src.agg(min("ems"), max("ems"), max("event_id")).collect()(0)
-    if (bounds.isNullAt(0)) // empty feed: empty sessions, don't throw on max
-      return changelog.sparkSession.emptyDataFrame
-        .select(lit(0L).as("user_id"), lit(0L).as("session_id"),
-          lit(0L).as("n_events"), lit(0L).as("start_ms"),
-          lit(0L).as("end_ms"), lit(0L).as("duration_ms"))
-    val sentinelMs = bounds.getLong(1) + 10L * 24 * 3600 * 1000
-    // sentinel id = one past the observed max, like sentinelMs is
-    // derived from the observed max ems — no magic constant a larger
-    // changelog's real event_ids could share
-    val sentinelId = bounds.getLong(2) + 1L
-    val sentinels = src.select(col("user_id")).distinct()
-      .select(col("user_id"), lit(sentinelId).as("event_id"),
-        lit(sentinelMs).as("ems"), lit("U").as("op"),
-        lit(0L).as("value_cents"),
-        timestamp_millis(lit(sentinelMs)).as("ts"))
-    replayStaged(spark,
-        rangeSlices(src, "ems", bounds.getLong(0), bounds.getLong(1),
-          nBatches) :+ sentinels,
-        OutputMode.Append())(
-        df => sessionizeStream(spark, df.as[ChangeTs]).toDF())
-      .where(col("start_ms") < sentinelMs) // guard: sentinel sessions
-      .select("user_id", "session_id", "n_events", "start_ms", "end_ms",
-        "duration_ms")
+    replay(spark, src, ranges("ems", nBatches),
+      sentinel = Some(Sentinel(Seq("user_id"), "op" -> "U", TenDaysMs)))(
+      (df, b) => sessionizeStream(spark, df.as[ChangeTs]).toDF()
+        .where(col("start_ms") < b.hi + TenDaysMs)) // guard: sentinel sessions
   }
 
   /** Exactly-once parity harness for [[dedupDeliveries]]: every event
@@ -1373,8 +1253,9 @@ object CdcStream {
     * Catches both failure modes (a dropped first delivery or a leaked
     * duplicate) cross-engine. */
   def dedupParity(spark: SparkSession, events: DataFrame): DataFrame = {
-    val src = events.select(col("event_id"), col("ts"))
-    replayStaged(spark, Seq(src, src), OutputMode.Append())(dedupDeliveries)
+    val twice = Split(2, _ => explode(array(lit(0), lit(1))))
+    replay(spark, events.select(col("event_id"), col("ts")), twice)(
+        (df, _) => dedupDeliveries(df))
       .select(col("event_id"))
   }
 
@@ -1389,13 +1270,8 @@ object CdcStream {
     val src = events.select(col("ts"), col("event_type"),
       round(col("value") * 100).cast("long").as("value_cents"),
       unix_millis(col("ts")).as("ems"))
-    val bounds = src.agg(min("ems"), max("ems")).collect()(0)
-    val slices =
-      if (bounds.isNullAt(0)) Seq(src) // one empty batch, empty windows
-      else rangeSlices(src, "ems", bounds.getLong(0), bounds.getLong(1),
-        nBatches)
-    replayStaged(spark, slices.map(_.drop("ems")), OutputMode.Complete())(
-      windowedThroughput)
+    replay(spark, src, ranges("ems", nBatches), OutputMode.Complete())(
+      (df, _) => windowedThroughput(df))
   }
 
   /** Allowed lateness, window width and straggler share (1-in-10 by
@@ -1430,38 +1306,28 @@ object CdcStream {
     * same batch assignment + watermark recurrence in SQL and must
     * hash-match the surviving aggregate exactly. */
   def lateParity(spark: SparkSession, events: DataFrame): DataFrame = {
-    val nBatches = LateBatches
     val src = events.select(col("ts"), col("event_type"),
       round(col("value") * 100).cast("long").as("value_cents"),
       col("event_id"), unix_millis(col("ts")).as("ems"))
-    val b0 = src.agg(min("ems"), max("ems")).collect()(0)
-    if (b0.isNullAt(0)) // empty feed: empty windows
-      return spark.emptyDataFrame.select(lit(0L).as("win_s"),
-        lit("").as("event_type"), lit(0L).as("n"), lit(0L).as("sum_cents"))
-    val lo = b0.getLong(0); val hi = b0.getLong(1); val span = hi - lo + 1
-    val rangeIdx = (1 until nBatches).foldLeft(lit(0)) { (acc, i) =>
-      when(col("ems") >= lit(lo + span * i / nBatches), lit(i)).otherwise(acc)
-    }
     val straggles = pmod(graft.functions.PortableHash.phash(
       concat(lit("late:"), col("event_id").cast("string"))),
       lit(LateStragglerMod)) === 0L
-    val withB = src.withColumn("b",
-      rangeIdx + when(straggles, lit(1)).otherwise(lit(0)))
-    val sentinelMs = hi + 10L * 24 * 3600 * 1000
-    val sentinel = spark.range(1).select(
-      timestamp_millis(lit(sentinelMs)).as("ts"),
-      lit("zz_sentinel").as("event_type"), lit(0L).as("value_cents"))
-    val batches = (0 to nBatches).map(i =>
-      withB.where(col("b") === i).select("ts", "event_type", "value_cents"))
-    replayStaged(spark, batches :+ sentinel, OutputMode.Append(),
-      perFileDrain = true) { df =>
+    // ranges 0..LateBatches-1, plus the batch the last range's
+    // stragglers arrive in
+    val split = Split(LateBatches + 1, b =>
+      rangeIndex(col("ems"), b, LateBatches) +
+        when(straggles, lit(1)).otherwise(lit(0)), Some("ems"))
+    replay(spark, src, split,
+      sentinel = Some(Sentinel(Nil, "event_type" -> "zz_sentinel", TenDaysMs)),
+      drainEach = Some((_, _) => ())) { (df, b) =>
       df.withWatermark("ts", s"${LateDelayMs / 1000} seconds")
         .groupBy(window(col("ts"), s"${LateWindowMs / 1000} seconds"),
           col("event_type"))
         .agg(count(lit(1)).as("n"), sum("value_cents").as("sum_cents"))
         .select(unix_timestamp(col("window.start")).as("win_s"),
           col("event_type"), col("n"), col("sum_cents"))
-    }.where(col("win_s") * 1000 <= hi)
+        .where(col("win_s") * 1000 <= b.hi)
+    }
   }
 
   /** Streaming↔batch LWW parity harness (batch-facing): replays the
@@ -1482,12 +1348,12 @@ object CdcStream {
     import spark.implicits._
     val src = changelog
       .select("user_id", "event_id", "ems", "op", "value_cents")
-    val batches = (0 until nBatches).map(i =>
-      src.where(pmod(col("event_id"), lit(nBatches.toLong)) === i.toLong))
+    val interleave =
+      Split(nBatches, _ => pmod(col("event_id"), lit(nBatches.toLong)))
     // Update-mode memory sink appends each batch's emissions — the
     // final state per key is the LWW max, same struct order as batch
-    replayStaged(spark, batches, OutputMode.Update())(
-        df => latestState(spark, df.as[Change]).toDF())
+    replay(spark, src, interleave, OutputMode.Update())(
+        (df, _) => latestState(spark, df.as[Change]).toDF())
       .groupBy("user_id")
       .agg(max(struct(col("last_ems"), col("last_event_id"),
         col("last_op"), col("last_value_cents"))).as("s"))

@@ -26,7 +26,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * ATOMIC_MOVE could NOT provide it: Linux rename(2) silently replaces
   * an existing target). Cuts the metadata cost to ~millisecond.
   *
-  * Scope: the PARITY HARNESS only (CdcStream.replayStaged sets
+  * Scope: the PARITY HARNESS only (CdcStream.replay sets
   * `spark.sql.streaming.checkpointFileManagerClass` scoped to the
   * replay, restoring the session default after). The production lane
   * (StreamRun) keeps the default manager: a deployment's checkpoint

@@ -661,4 +661,81 @@ class CdcStreamSpec extends AnyFunSuite {
         s"n_new regressed: ${news.toSeq}")
     }
   }
+
+  test("every harness replays an empty feed to its batch twin's rows " +
+    "on the same empty input") {
+    import org.apache.spark.sql.DataFrame
+    import graft.operators.{Analytics, Ledger, Similarity, Temporal}
+    val ev = Tables.events(spark, TestSpark.Sf).limit(0)
+    val cl = ChangeLog.normalize(Tables.events(spark, TestSpark.Sf)).limit(0)
+    val emb = Tables.embeddings(spark, TestSpark.Sf).limit(0)
+    val hourly = ev.select(col("ts"), col("event_type"),
+        round(col("value") * 100).cast("long").as("value_cents"))
+      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n"), sum("value_cents").as("sum_cents"))
+      .select(unix_timestamp(col("window.start")).as("hour_s"),
+        col("event_type"), col("n"), col("sum_cents"))
+    val pairs: Seq[(String, DataFrame, DataFrame)] = Seq(
+      ("merge", CdcStream.mergeParity(spark, cl), CdcMerge.merge(cl)),
+      ("sessionize", CdcStream.sessionizeParity(spark, cl),
+        Temporal.sessionize(cl)),
+      ("tier", CdcStream.tierParity(spark, cl), Temporal.tierHistory(cl)),
+      ("queue", CdcStream.queueParity(spark, cl),
+        Temporal.queueWaitAudit(cl)),
+      ("balance", CdcStream.balanceParity(spark, cl),
+        Ledger.balanceAudit(cl)),
+      ("gap", CdcStream.gapParity(spark, cl), Ledger.sequenceGapAudit(cl)),
+      ("compaction", CdcStream.compactionParity(spark, cl),
+        Ledger.compactionPlan(cl)),
+      ("attribution", CdcStream.attributionParity(spark, ev),
+        Analytics.attributionLastTouch(ev)),
+      ("transitions", CdcStream.transitionsParity(spark, ev),
+        Analytics.eventTransitions(ev)),
+      ("funnel", CdcStream.funnelParity(spark, ev),
+        Analytics.funnelConversion(ev)),
+      ("linear", CdcStream.linearParity(spark, ev),
+        Analytics.attributionLinear(ev)),
+      ("position", CdcStream.positionParity(spark, ev),
+        Analytics.attributionPosition(ev)),
+      ("window", CdcStream.windowParity(spark, ev), hourly),
+      ("late", CdcStream.lateParity(spark, ev),
+        hourly.withColumnRenamed("hour_s", "win_s")),
+      ("dedup", CdcStream.dedupParity(spark, ev), ev.select("event_id")),
+      ("ivf", CdcStream.ivfIngestMonitor(spark, emb).drop("batch_id"),
+        Similarity.ivfIncremental(emb)))
+    pairs.foreach { case (name, stream, twin) =>
+      def rows(df: DataFrame) =
+        df.select(stream.columns.map(col): _*).collect()
+          .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+      assert(rows(stream) === rows(twin), name)
+    }
+  }
+
+  test("a replay restores the session conf it scopes, also when the " +
+    "piped function throws") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.codegen.wholeStage",
+      "spark.sql.streaming.checkpointFileManagerClass")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    def snapshot() = keys.map(k => k -> spark.conf.getOption(k))
+    val cl = ChangeLog.normalize(Tables.events(spark, TestSpark.Sf))
+      .limit(200)
+    try {
+      spark.conf.set("spark.sql.shuffle.partitions", "5")
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+      val before = snapshot()
+      assert(CdcStream.mergeParity(spark, cl).count() > 0L)
+      assert(snapshot() === before)
+      // a value_cents Change cannot up-cast makes the piped function
+      // throw inside the replay
+      val bad = cl.withColumn("value_cents", col("value_cents").cast("string"))
+      intercept[org.apache.spark.sql.AnalysisException](
+        CdcStream.mergeParity(spark, bad))
+      assert(snapshot() === before)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
